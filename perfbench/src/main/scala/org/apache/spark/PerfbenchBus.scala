@@ -1,0 +1,7 @@
+package org.apache.spark
+
+/** Access to the listener bus, which Spark keeps package-private. */
+object PerfbenchBus {
+  /** Blocks until every posted event has reached the listeners. */
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
